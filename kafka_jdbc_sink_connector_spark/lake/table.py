@@ -9,7 +9,12 @@ table format is built from scratch on two public, well-known ideas:
 * **hash-bucketed layout** (Hive/Iceberg bucketing): every row lives in
   bucket ``xxhash64(bucket_key) % n_buckets``; a MERGE only rewrites
   the buckets that contain touched keys (copy-on-write at bucket
-  granularity) and a key lookup reads exactly one bucket. A
+  granularity) and a key lookup reads exactly one bucket: ``read`` /
+  ``count`` with an ``=`` / ``in`` predicate on the bucket key hash
+  the literals on the driver (a pure-Python port of Spark's XXH64)
+  and scan only their buckets. String/int/long keys are pruned; any
+  other key type, a NULL, or a literal of another Python type than
+  the key column's reads every bucket, as before. A
   **merge-on-read** mode (``commit_delta`` + :mod:`.mor`) appends
   per-bucket delta files instead and folds them at read/compaction —
   the Hudi-MOR / Iceberg-v2 idea, for steady-state CDC where COW
@@ -51,7 +56,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_jdbc_sink_connector_spark.functions.keys import BUCKET_COL, bucket_expr
+from kafka_jdbc_sink_connector_spark.functions.keys import (
+    BUCKET_COL,
+    bucket_expr,
+    bucket_of,
+)
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -135,6 +144,34 @@ class Snapshot:
 
     def all_files(self) -> list[str]:
         return self.files() + self.delta_files() + self.sdel_files()
+
+    def hot_buckets(self) -> set[int]:
+        """Buckets carrying unresolved MOR delta or subset-delete files."""
+        return {int(b) for d in (self.delta_buckets, self.sdel_buckets)
+                for b, fs in d.items() if fs}
+
+    def key_buckets(self, where: list[tuple] | None) -> set[int] | None:
+        """The buckets that can hold rows matching ``where``, from its
+        ``=`` / ``in`` predicates on ``bucket_key`` hashed on the driver
+        (:func:`..functions.keys.bucket_of`, no Spark job); ``None``
+        when none of them pins the key (no such predicate, or a literal
+        whose bucket can't be computed — see ``bucket_of``)."""
+        from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
+
+        key = next(
+            (f for f in self.schema.fields if f.name == self.bucket_key), None
+        )
+        out = None
+        for col, op, val in stats_mod._validate_predicates(where or []):
+            if key is None or col != key.name or op not in ("=", "in"):
+                continue
+            if op == "in" and not isinstance(val, (list, tuple, set)):
+                continue
+            ids = {bucket_of(v, key.dataType, self.n_buckets)
+                   for v in (val if op == "in" else [val])}
+            if None not in ids:
+                out = ids if out is None else out & ids
+        return out
 
 
 class LakeTable:
@@ -240,18 +277,32 @@ class LakeTable:
         bucket-pruned parquet scan.
 
         ``where`` — a conjunction of ``(col, op, literal)`` predicates
-        (see :mod:`.stats`) — enables FILE-LEVEL DATA SKIPPING: base
-        files whose footer min/max prove no matching rows are dropped
-        from the scan, and the predicate is re-applied to surviving
-        rows, so ``read(where=P)`` returns exactly
-        ``read().filter(P)``. Buckets carrying unresolved MOR deltas
-        are never file-pruned (a soft-delete overlay resolves against
-        base-row columns, so every base row must be present); run
-        compaction to restore skippability there.
+        (see :mod:`.stats`) — prunes in two steps, and the predicate is
+        re-applied to surviving rows, so ``read(where=P)`` returns
+        exactly ``read().filter(P)``:
+
+        1. BUCKET PRUNING: ``=`` / ``in`` on the snapshot's
+           ``bucket_key`` narrows ``buckets`` to the literals' hash
+           buckets (:meth:`Snapshot.key_buckets`, computed on the
+           driver; the bucket count is the read snapshot's). It falls
+           back to all buckets for a key type other than
+           string/int/long, a NULL, or a literal whose Python type
+           differs from the key column's.
+        2. FILE-LEVEL DATA SKIPPING: base files whose footer min/max
+           prove no matching rows are dropped from the scan. Buckets
+           carrying unresolved MOR deltas are never file-pruned (a
+           soft-delete overlay resolves against base-row columns, so
+           every base row must be present); run compaction to restore
+           skippability there.
         """
         from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
 
         snap = self.snapshot if version is None else self._read_version(version)
+        scope = snap.key_buckets(where)
+        if scope is not None:
+            buckets = sorted(
+                scope if buckets is None else scope.intersection(buckets)
+            )
         if not snap.delta_files(buckets) and not snap.sdel_files(buckets):
             df = self._read_base(snap, buckets, where=where)
         else:
@@ -263,11 +314,9 @@ class LakeTable:
             requested = (
                 list(range(snap.n_buckets)) if buckets is None else buckets
             )
-            delta_ids = {
-                int(b) for b, fs in snap.delta_buckets.items() if fs
-            } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
-            hot = [b for b in requested if b in delta_ids]
-            cold = [b for b in requested if b not in delta_ids]
+            hot_ids = snap.hot_buckets()
+            hot = [b for b in requested if b in hot_ids]
+            cold = [b for b in requested if b not in hot_ids]
             has_sdel = bool(snap.sdel_files(hot))
             df = mor.resolve(
                 self._read_base(snap, hot),
@@ -297,22 +346,23 @@ class LakeTable:
         * only BOUNDARY files (stats can't decide) are scanned, with
           the residual predicate applied.
 
-        Buckets carrying unresolved MOR deltas fall back to the resolve
-        path (delta rows change counts positionlessly). At 100 TB a
-        "rows since T" count over a time-clustered table touches ~one
-        boundary file per bucket instead of the table.
+        Only the buckets :meth:`read` would keep after bucket pruning
+        are counted (a bucket-key ``=`` / ``in`` counts one bucket per
+        literal; same fallbacks). Buckets carrying unresolved MOR
+        deltas fall back to the resolve path (delta rows change counts
+        positionlessly). At 100 TB a "rows since T" count over a
+        time-clustered table touches ~one boundary file per bucket
+        instead of the table.
         """
         from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
 
         snap = self.snapshot
-        delta_ids = {
-            int(b) for b, fs in snap.delta_buckets.items() if fs
-        } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
-        total = 0
-        if delta_ids:
-            hot = sorted(delta_ids)
-            total += self.read(buckets=hot, where=where).count()
-        cold = [b for b in range(snap.n_buckets) if b not in delta_ids]
+        scope = snap.key_buckets(where)
+        requested = range(snap.n_buckets) if scope is None else sorted(scope)
+        hot_ids = snap.hot_buckets()
+        hot = [b for b in requested if b in hot_ids]
+        total = self.read(buckets=hot, where=where).count() if hot else 0
+        cold = [b for b in requested if b not in hot_ids]
         partial: list[str] = []
         for f in snap.files(cold):
             ent = snap.file_stats.get(f)
@@ -346,10 +396,8 @@ class LakeTable:
         from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
 
         snap = self.snapshot
-        delta_ids = {
-            int(b) for b, fs in snap.delta_buckets.items() if fs
-        } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
-        cold = [b for b in range(snap.n_buckets) if b not in delta_ids]
+        hot_ids = snap.hot_buckets()
+        cold = [b for b in range(snap.n_buckets) if b not in hot_ids]
         out: dict[str, tuple] = {}
         scan_files: set[str] = set()
         for c in cols:
@@ -368,9 +416,9 @@ class LakeTable:
                     *[os.path.join(self.path, f) for f in sorted(scan_files)]
                 )
             )
-        if delta_ids:
+        if hot_ids:
             frames.append(
-                self.read(buckets=sorted(delta_ids)).select(
+                self.read(buckets=sorted(hot_ids)).select(
                     *[F.col(f.name) for f in snap.schema.fields]
                 )
             )

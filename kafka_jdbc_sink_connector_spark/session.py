@@ -8,8 +8,26 @@ for every pandas interchange, UTC pins oracle comparisons).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: Spark's byte-string syntax (``JavaUtils.byteStringAs``): a whole
+#: number with an optional binary unit
+_BYTE_STRING = re.compile(r"[0-9]+([kmgtp]b?|b)?")
+
+
+def _aqe_min_partition() -> str:
+    """``SPARK_GRAFT_AQE_MIN_PARTITION`` (default ``64k``), checked
+    here so a typo names the variable instead of failing inside Spark."""
+    raw = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
+    v = raw.strip().lower()
+    if not _BYTE_STRING.fullmatch(v):
+        raise ValueError(
+            f"SPARK_GRAFT_AQE_MIN_PARTITION={raw!r} is not a byte string "
+            f"such as 64k or 1m"
+        )
+    return v
 
 
 def build_session(
@@ -18,6 +36,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    aqe_min_partition = _aqe_min_partition()
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
     if shuffle_partitions is None:
@@ -73,7 +92,7 @@ def build_session(
         # floor stays scale-adaptive: AQE still targets
         # max(total/defaultParallelism, this).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+                aqe_min_partition)
         # NOTE measured non-win (r8): raising
         # spark.sql.sources.parallelPartitionDiscovery.threshold to
         # keep manifest-known file lists off the distributed-listing

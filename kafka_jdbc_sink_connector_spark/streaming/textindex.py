@@ -69,25 +69,6 @@ def default_tokenizer(text: Column) -> Column:
     )
 
 
-def _term_buckets(
-    spark: SparkSession, table: LakeTable, terms: list[str]
-) -> list[int]:
-    """The bucket ids the probe terms hash to, computed with the
-    writer's own bucket expression over a tiny literal frame."""
-    from kafka_jdbc_sink_connector_spark.functions.keys import (
-        bucket_expr,
-    )
-
-    lits = spark.createDataFrame([(x,) for x in terms], "term string")
-    return sorted(
-        r["b"]
-        for r in lits.select(
-            bucket_expr(table.snapshot.bucket_key,
-                        table.snapshot.n_buckets).alias("b")
-        ).distinct().collect()
-    )
-
-
 def search_postings(
     spark: SparkSession,
     table: LakeTable,
@@ -97,10 +78,11 @@ def search_postings(
 ) -> DataFrame:
     """Term lookup over any ``(term, id)`` posting lake table —
     shared by :meth:`TextIndexRunner.lookup` and the CLI ``search``
-    command so both get the same pruning: manifest-level to the
-    buckets the probe terms hash to (computed with the writer's own
-    bucket expression), then file-level via the term predicate
-    against footer stats/blooms. ``any`` = OR, ``all`` = AND."""
+    command so both get the same pruning from the term predicate:
+    :meth:`LakeTable.read` narrows a table bucketed BY TERM to the
+    buckets the probe terms hash to, then skips files via footer
+    stats/blooms (a table bucketed on the id gets the file-level step
+    only). ``any`` = OR, ``all`` = AND."""
     if mode not in ("any", "all"):
         raise ValueError("mode must be any|all")
     terms = [t for t in terms if t]
@@ -114,25 +96,7 @@ def search_postings(
                 f"{table.snapshot.key_fields}; pass id_col"
             )
         id_col = others[0]
-    # manifest-level pruning only applies when the table is actually
-    # bucketed BY TERM (a posting table keyed (id, term) buckets on
-    # the id — probing term hashes there would read wrong buckets,
-    # and evaluating bucket_expr(id_col) over a term-only literal
-    # frame would just crash); such tables still get the file-level
-    # term predicate
-    probe_buckets = (
-        _term_buckets(spark, table, terms)
-        if table.snapshot.bucket_key == "term"
-        else None
-    )
-    where = (
-        [("term", "in", terms)]
-        if len(terms) > 1
-        else [("term", "=", terms[0])]
-    )
-    hits = table.read(buckets=probe_buckets, where=where).select(
-        "term", id_col
-    )
+    hits = table.read(where=[("term", "in", terms)]).select("term", id_col)
     if mode == "any":
         return hits.select(id_col).distinct()
     return (
@@ -285,9 +249,10 @@ class TextIndexRunner:
 
     def _probe_buckets(self, terms: list[str]) -> list[int]:
         """Manifest-level pruning: the bucket ids the probe terms hash
-        to — see :func:`_term_buckets` (the shared implementation
-        :func:`search_postings` uses)."""
-        return _term_buckets(self.spark, self.applier.table(), terms)
+        to — the buckets :func:`search_postings`' read is narrowed to
+        (the index is always bucketed by term)."""
+        snap = self.applier.table().snapshot
+        return sorted(snap.key_buckets([("term", "in", list(terms))]))
 
     def lookup(self, terms: list[str], mode: str = "any") -> DataFrame:
         """Documents matching ``terms``: ``any`` (OR) or ``all``
