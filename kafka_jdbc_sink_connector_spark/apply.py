@@ -15,13 +15,15 @@ reference chain ``put → JdbcAuditDbWriter.write → BufferedRecords.flush
 6. **lineage** append (per-partition offset ranges + op counts).
 
 Job economy (the per-batch fixed cost is what bounds throughput on
-small micro-batches): exactly **three Spark jobs per batch** —
+small micro-batches): a steady batch runs **5 Spark jobs copy-on-write,
+4 merge-on-read** (AQE runs each shuffle stage as its own job) —
 
-* one combined stats pass over the validated-tagged events producing
-  per-partition lineage counts, the quarantine count, *and* the set of
-  affected hash buckets (``collect_set``) in a single aggregation;
-* one (conditional) quarantine write, only when bad rows exist;
-* the merge itself (collapse → outer join → bucket-partitioned write).
+* 2: one combined stats pass producing per-partition lineage counts,
+  the quarantine count, *and* the set of affected hash buckets
+  (``collect_set``) in a single aggregation;
+* +1 quarantine write, only when bad rows exist;
+* the merge: batch and (COW) target shuffled onto the table's buckets,
+  then the per-bucket write with no further shuffle.
 
 Schema evolution and the lineage append are metadata/driver-side
 (manifest commit; collected lineage rows re-parallelized), not scans.
@@ -33,15 +35,6 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
-
-_DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    now = time.monotonic()
-    if _DEBUG_TIMING:
-        print(f"    [timing] {label}: {now - t0:.2f}s", flush=True)
-    return now
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -175,7 +168,6 @@ class CdcApplier:
         tagged, casts, stats_rows = self._stats_and_quarantine(
             events, table, batch_id
         )
-        _t = _tick("stats job", t0)
         n_quarantined = int(sum(r["n_quarantined"] for r in stats_rows))
         n_events = int(
             sum(r["n_insert"] + r["n_update"] + r["n_delete"]
@@ -190,9 +182,8 @@ class CdcApplier:
         evolved = evolve_for_batch(
             table, valid, cfg, source_id=source_id, batch_id=batch_id
         )
-        _t = _tick("quarantine+evolve", _t)
 
-        # --- job 3: the merge (or append) commit
+        # --- the merge (or append) commit
         stats = {"batch_id": batch_id, "n_events": n_events,
                  "n_quarantined": n_quarantined}
         if cfg.insert_mode is InsertMode.INSERT:
@@ -216,7 +207,9 @@ class CdcApplier:
                 to_collapse = valid.filter(
                     F.col(cfg.op_column) != F.lit(cfg.op_delete_value)
                 )
-            collapsed = collapse_last_writer(to_collapse, cfg, payload)
+            collapsed = collapse_last_writer(
+                to_collapse, cfg, payload, bucket_by=(
+                    table.snapshot.bucket_key, table.snapshot.n_buckets))
             snap = merge_ops.merge_into(
                 table, collapsed, cfg,
                 audit_ts=self.audit_ts,
@@ -224,11 +217,9 @@ class CdcApplier:
                 affected_buckets=affected, stats=stats,
                 subset_deletes=subset_dels,
             )
-        _t = _tick("merge commit", _t)
 
         # --- lineage write from the already-collected stats
         self._write_lineage(stats_rows, batch_id, snap.version)
-        _t = _tick("lineage write", _t)
 
         return BatchResult(
         batch_id=batch_id,
@@ -361,9 +352,9 @@ class CdcApplier:
         ]
         if not rows:
             # an EMPTY batch still writes one all-zero marker row: the
-            # partition dir is the "side tables committed" flag, and
-            # without it every replay of the empty batch re-runs the
-            # stats job in _backfill_side_tables
+            # published part file is the "side tables committed" flag,
+            # and without it every replay of the empty batch re-runs
+            # the stats job in _backfill_side_tables
             rows = [(batch_id, None, None, None, 0, 0, 0, 0,
                      snapshot_version)]
         # driver-side parquet write (pyarrow): the lineage rows are
@@ -404,8 +395,9 @@ class CdcApplier:
         self, events, table, batch_id: int, source_id: str
     ) -> None:
         """Replay of an already-merged batch: re-derive quarantine +
-        lineage only if this batch's lineage partition is missing
-        (crash between merge commit and the side-table writes).
+        lineage only if this batch's lineage file is missing (crash
+        between merge commit and the side-table writes, or inside the
+        lineage write).
 
         The recompute is pinned to the snapshot that actually committed
         the batch — not the table head — so the backfilled lineage
@@ -413,7 +405,7 @@ class CdcApplier:
         runs under the schema of the original attempt (the head may
         have evolved since)."""
         part_dir = os.path.join(self.lineage_path, f"batch_id={batch_id}")
-        if os.path.isdir(part_dir):
+        if os.path.isfile(os.path.join(part_dir, "part-0.parquet")):
             return
         commit_snap, schema_snap = self._committing_snapshot(
             table, batch_id, source_id
@@ -606,10 +598,10 @@ class CdcApplier:
         ids (they grow one partition per micro-batch forever
         otherwise). Observability-only data — the exactly-once
         watermark lives in the table snapshot and is untouched. Safe
-        even inside the checkpoint replay window: the partition dir
-        doubles as the 'side tables committed' flag, so a replay of
-        an expired batch merely recomputes and rewrites its rows
-        (idempotent), it never double-applies."""
+        even inside the checkpoint replay window: the lineage
+        partition's part file doubles as the 'side tables committed'
+        flag, so a replay of an expired batch merely recomputes and
+        rewrites its rows (idempotent), it never double-applies."""
         if keep_batches < 0:
             raise ValueError("keep_batches must be >= 0")
         removed = {"lineage": 0, "quarantine": 0, "lineage_dlq": 0}

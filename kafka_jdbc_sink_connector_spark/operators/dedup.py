@@ -25,18 +25,21 @@ branch re-creates it), so *any* delete kills the key — information the
 winner delete alone cannot carry when it precedes the latest upsert.
 
 Scale: implemented as ``groupBy(pk).agg(...)`` — a declarative
-aggregate with **map-side partial aggregation**, so at-least-once
-duplicate storms and hot keys are mostly reduced before the shuffle
+aggregate with **map-side partial aggregation** before its pk shuffle
 (a window + ``row_number`` formulation would sort and shuffle every
-event). The delete side collects a per-key sorted list of delete
-events (offset + retain-field struct); its size is bounded by the
-number of DELETE events per key per micro-batch (~1% of CDC traffic,
-almost always 0 or 1 per key), not by the batch — upsert storms still
-collapse map-side to one struct. An optional salted two-phase variant
-splits pathological single-key floods across ``salt`` reducers first,
-and prunes each salt group's delete list to deletes after the group's
-own latest upsert (a safe superset of the global winner, since the
-global latest upsert offset is the max over groups).
+event). On the merge path (``bucket_by``) the one shuffle is the
+repartition onto the target's buckets, which the merge reuses: the
+batch crosses uncombined. That saves the merge a bucket-sized output
+shuffle, but costs more when a batch has many events per key and the
+target is small (SCALE.md "Skew" has the measured cases). The delete
+side collects a per-key sorted list of delete events (offset + retain
+struct), bounded by DELETE events per key per micro-batch (~1% of CDC
+traffic, almost always 0 or 1 per key). An optional salted two-phase
+variant splits single-key floods across ``salt`` reducers first —
+phase 1 still combines map-side before its (pk, salt) shuffle; phase
+2 lands on the buckets — and prunes each salt group's delete list to
+deletes after the group's own latest upsert (a safe superset of the
+global winner: the global latest upsert offset is the max over groups).
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.config import SinkConfig
+from kafka_jdbc_sink_connector_spark.functions.keys import BUCKET_COL, bucket_expr
 
 UPSERT_STRUCT = "__upsert"
 DELETE_STRUCT = "__delete"
@@ -95,6 +99,7 @@ def collapse_last_writer(
     cfg: SinkConfig,
     payload_cols: list[str],
     salt: int | None = None,
+    bucket_by: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Collapse ``events`` to one row per ``cfg.pk_fields``.
 
@@ -113,6 +118,9 @@ def collapse_last_writer(
     grouping keys) and the delete structs carry only the soft-delete
     retain fields — the aggregate is sort-based (struct buffers), so
     every byte is sorted and shuffled once.
+
+    ``bucket_by=(bucket_key, n_buckets)`` also groups by the target's
+    ``__bucket`` and hash-partitions the output on it (the merge path).
     """
     salt = cfg.dedup_salt if salt is None else salt
     op = F.col(cfg.op_column)
@@ -120,7 +128,13 @@ def collapse_last_writer(
     is_del = op == F.lit(cfg.op_delete_value)
 
     keys = list(cfg.pk_fields)
+    if bucket_by:
+        events = events.withColumn(BUCKET_COL, bucket_expr(*bucket_by))
+        keys.append(BUCKET_COL)
     payload, del_payload = _payload_structs(events, cfg, payload_cols)
+
+    def by_bucket(df: DataFrame) -> DataFrame:
+        return df.repartition(bucket_by[1], BUCKET_COL) if bucket_by else df
 
     del_entry = F.when(
         is_del, F.struct(off.alias("off"), del_payload.alias("row"))
@@ -149,7 +163,7 @@ def collapse_last_writer(
                 F.filter(F.col(DELETE_LIST), lambda d: d["off"] > floor1),
             )
         )
-        merged = phase1.groupBy(*keys).agg(
+        merged = by_bucket(phase1).groupBy(*keys).agg(
             F.max_by(F.col(UPSERT_STRUCT), F.col(UPSERT_OFF)).alias(
                 UPSERT_STRUCT
             ),
@@ -160,7 +174,7 @@ def collapse_last_writer(
             F.min(F.col(FIRST_DEL_OFF)).alias(FIRST_DEL_OFF),
         )
         return _winner_select(merged, keys)
-    return _winner_select(events.groupBy(*keys).agg(*aggs), keys)
+    return _winner_select(by_bucket(events).groupBy(*keys).agg(*aggs), keys)
 
 
 def collapse_deletes_by_key(

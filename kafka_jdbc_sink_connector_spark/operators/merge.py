@@ -30,14 +30,17 @@ delete only (hard)          target row removed if present
 delete only (mode none)     ignored
 ==========================  =====================================================
 
-Scale notes: the source side is ≤1 row/key post-collapse; Catalyst
-picks broadcast-hash when it is small (common: a micro-batch touches
-few keys) and sort-merge otherwise, with AQE skew splitting. The target
-scan reads only affected buckets (bucket pruning via the manifest) and
-only the columns in the table schema.
+Scale notes: the collapsed batch and the affected target buckets are
+each hash-partitioned once on ``__bucket`` and joined on pk +
+``__bucket``, so the join's output is already one partition per bucket
+and both writes take it as-is. The target keeps its shuffle: a
+DataFrame file scan cannot declare its files' bucket partitioning.
 """
 
 from __future__ import annotations
+
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,6 +61,36 @@ from kafka_jdbc_sink_connector_spark.operators.dedup import (
 )
 
 _LONG_MIN = -(2**63)
+
+#: at its default, sides partitioned on a subset of the join keys re-shuffle
+_COPARTITION_CONF = "spark.sql.requireAllClusterKeysForCoPartition"
+_copartition_lock = threading.Lock()
+_copartition_users: dict = {}  # session -> [merges writing, saved value]
+
+
+@contextmanager
+def _bucket_copartitioned(spark):
+    """Accept the bucket partitioning as co-partitioning while a merge
+    writes (planning and AQE re-planning run in the write action).
+    Reference-counted per session: overlapping merges in threads
+    neither clear the setting under each other nor leak it."""
+    with _copartition_lock:
+        ent = _copartition_users.setdefault(spark, [0, None])
+        if ent[0] == 0:
+            ent[1] = spark.conf.get(_COPARTITION_CONF, None)
+            spark.conf.set(_COPARTITION_CONF, "false")
+        ent[0] += 1
+    try:
+        yield
+    finally:
+        with _copartition_lock:
+            ent[0] -= 1
+            if ent[0] == 0:
+                del _copartition_users[spark]
+                if ent[1] is None:
+                    spark.conf.unset(_COPARTITION_CONF)
+                else:
+                    spark.conf.set(_COPARTITION_CONF, ent[1])
 
 
 def payload_columns(table_schema, cfg: SinkConfig) -> list[str]:
@@ -233,7 +266,8 @@ def merge_into(
     subset_deletes: DataFrame | None = None,
     stats: dict | None = None,
 ) -> Snapshot:
-    """Apply a collapsed (≤1 row/key) change set and commit a snapshot.
+    """Apply a change set collapsed by ``collapse_last_writer(...,
+    bucket_by=(bucket_key, n_buckets))`` and commit a snapshot.
 
     ``affected_buckets`` lets the caller reuse a bucket set it already
     computed (the applier folds it into its lineage pass), avoiding an
@@ -253,13 +287,11 @@ def merge_into(
     data_cols = [f.name for f in snap.schema.fields]
     payload = payload_columns(snap.schema, cfg)
 
-    src = collapsed.withColumn(
-        BUCKET_COL, bucket_expr(snap.bucket_key, snap.n_buckets)
-    )
     affected = (
         affected_buckets
         if affected_buckets is not None
-        else [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
+        else [r[0] for r in
+              collapsed.select(BUCKET_COL).distinct().collect()]
     )
     if (
         cfg.merge_mode == "mor"
@@ -273,7 +305,7 @@ def merge_into(
         # the bucket key by config contract). (The very first batch
         # into empty buckets falls through to the COW bootstrap below,
         # so the table always starts from clean base files.)
-        delta = _build_delta_rows(snap, src, cfg, audit)
+        delta = _build_delta_rows(snap, collapsed, cfg, audit)
         sdel = (
             _build_sdel_rows(snap, subset_deletes, cfg, audit)
             if subset_deletes is not None
@@ -296,7 +328,7 @@ def merge_into(
             stats=stats,
         )
 
-    s = src.withColumn("__s", F.lit(True))
+    s = collapsed.withColumn("__s", F.lit(True))
     s_pref = s.select(*[F.col(c).alias(f"s_{c}") for c in s.columns])
     if not snap.files(affected):
         # bootstrap fast path: no target files in the affected buckets
@@ -313,16 +345,16 @@ def merge_into(
     else:
         tgt = table.read(buckets=affected, include_bucket=True).withColumn(
             "__t", F.lit(True)
-        )
-        # Plain-equality join on the pk (keys are validated non-null
-        # upstream, O2): this lets Catalyst reuse the collapse
-        # aggregate's hash partitioning for the source side instead of
-        # re-shuffling on null-safe composite keys. Both sides carry
-        # BUCKET_COL (identical by construction); coalesced afterwards.
+        ).repartition(snap.n_buckets, BUCKET_COL)
+        # Plain-equality join on pk + BUCKET_COL (keys are validated
+        # non-null upstream, O2): both sides' BUCKET_COL partitioning
+        # satisfies it under _bucket_copartitioned. BUCKET_COL is
+        # identical on matched rows by construction; coalesced below.
         t_pref = tgt.select(
             *[F.col(c).alias(f"t_{c}") for c in tgt.columns]
         )
-        cond = [t_pref[f"t_{k}"] == s_pref[f"s_{k}"] for k in keys]
+        cond = [t_pref[f"t_{k}"] == s_pref[f"s_{k}"]
+                for k in keys + [BUCKET_COL]]
         j = t_pref.join(s_pref, cond, "full_outer")
 
     t = lambda c: F.col(f"t_{c}")  # noqa: E731
@@ -458,13 +490,16 @@ def merge_into(
     result = j.filter(act != A_DROP).select(*out_cols)
     if subset_deletes is not None:
         result = _apply_subset_deletes(result, subset_deletes, cfg, audit)
-    return table.commit_rewrite(
-        result,
-        affected,
-        source_id=source_id,
-        batch_id=batch_id,
-        stats=stats,
-    )
+    with _bucket_copartitioned(table.spark):
+        return table.commit_rewrite(
+            result,
+            affected,
+            source_id=source_id,
+            batch_id=batch_id,
+            stats=stats,
+            # the subset-delete overlay join breaks the bucket layout
+            preserve_layout=subset_deletes is None,
+        )
 
 
 def _apply_subset_deletes(

@@ -423,3 +423,203 @@ def test_assemble_transcripts_one_shuffle_partial_agg(spark):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     rows = {r["conv_id"]: r for r in out.collect()}
     assert rows["c0"]["transcript"].startswith("u0\nu7\nu14")
+
+
+# -- bucket-aligned merge ------------------------------------------------
+
+_COPART = "spark.sql.requireAllClusterKeysForCoPartition"
+
+
+def _cdc_batch(spark, b: int, n: int = 40):
+    from tests.test_apply_batch import _events_df, ev
+
+    return _events_df(spark, [
+        ev(b * 1000 + i, "c" if b == 0 else "u", f"conv-{i % 13}", i)
+        for i in range(n)
+    ])
+
+
+def _bucket_applier(spark, path, **cfg):
+    from kafka_jdbc_sink_connector_spark.apply import CdcApplier
+
+    from tests.test_apply_batch import audit_col
+
+    return CdcApplier(spark, SinkConfig(n_buckets=4, **cfg), str(path),
+                      audit_ts=audit_col())
+
+
+def test_merge_write_reuses_bucket_partitioning(spark, tmp_path,
+                                                monkeypatch):
+    """A steady copy-on-write merge shuffles each side once, onto the
+    table's buckets, and writes the join's output as it comes: exactly
+    two REPARTITION_BY_NUM exchanges on __bucket, and no exchange
+    inserted to satisfy the join or the write."""
+    import re
+
+    plans = []
+    real = LakeTable.commit_rewrite
+
+    def spy(self, new_data, *a, **k):
+        # planned here, inside the merge's co-partitioning scope
+        plans.append(plan_of(new_data))
+        return real(self, new_data, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "commit_rewrite", spy)
+    ap = _bucket_applier(spark, tmp_path / "t")
+    ap.apply_batch(_cdc_batch(spark, 0), batch_id=0)
+    ap.apply_batch(_cdc_batch(spark, 1), batch_id=1)
+    plan = plans[-1]
+    assert "SortMergeJoin" in plan
+    assert len(re.findall(
+        r"Exchange hashpartitioning\(__bucket#\d+, 4\), REPARTITION_BY_NUM",
+        plan,
+    )) == 2, plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+
+
+@pytest.mark.parametrize("merge_mode,jobs", [("cow", 5), ("mor", 4)])
+def test_steady_apply_job_count(spark, tmp_path, merge_mode, jobs):
+    """Steady batch, no bad rows: 2 jobs for the stats pass, then the
+    collapse's bucket shuffle, the target's bucket shuffle (COW only)
+    and the write — no shuffle of the merged rows."""
+    ap = _bucket_applier(spark, tmp_path / "t", merge_mode=merge_mode)
+    ap.apply_batch(_cdc_batch(spark, 0), batch_id=0)
+    sc, group = spark.sparkContext, f"steady-apply-{merge_mode}"
+    sc.setJobGroup(group, group)
+    try:
+        ap.apply_batch(_cdc_batch(spark, 1), batch_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+def test_copartition_setting_restored(spark, tmp_path, monkeypatch):
+    """The co-partitioning relaxation holds while the merge writes and
+    nowhere else: restored after a normal apply and after a write that
+    raises, whatever the session had before."""
+
+    class Boom(RuntimeError):
+        pass
+
+    seen = []
+    real = LakeTable.commit_rewrite
+
+    def spy(self, *a, **k):
+        seen.append(spark.conf.get(_COPART))
+        return real(self, *a, **k)
+
+    def boom(self, *a, **k):
+        seen.append(spark.conf.get(_COPART))
+        raise Boom()
+
+    ap = _bucket_applier(spark, tmp_path / "t")
+    before = spark.conf.get(_COPART, None)
+    monkeypatch.setattr(LakeTable, "commit_rewrite", spy)
+    ap.apply_batch(_cdc_batch(spark, 0), batch_id=0)
+    ap.apply_batch(_cdc_batch(spark, 1), batch_id=1)
+    assert spark.conf.get(_COPART, None) == before
+    monkeypatch.setattr(LakeTable, "commit_rewrite", boom)
+    with pytest.raises(Boom):
+        ap.apply_batch(_cdc_batch(spark, 2), batch_id=2)
+    assert spark.conf.get(_COPART, None) == before
+    spark.conf.set(_COPART, "true")
+    try:
+        with pytest.raises(Boom):
+            ap.apply_batch(_cdc_batch(spark, 2), batch_id=2)
+        assert spark.conf.get(_COPART, None) == "true"
+    finally:
+        if before is None:
+            spark.conf.unset(_COPART)
+        else:
+            spark.conf.set(_COPART, before)
+    assert seen == ["false"] * 4
+
+
+def test_copartition_setting_survives_overlapping_merges(
+    spark, tmp_path, monkeypatch
+):
+    """Two threads merge at once, the first to start its write finishing
+    first: it must not clear the setting under the other's write, and
+    once both are done the session's value is back."""
+    import threading
+
+    aps = [_bucket_applier(spark, tmp_path / f"t{i}") for i in range(2)]
+    for ap in aps:
+        ap.apply_batch(_cdc_batch(spark, 0), batch_id=0)
+    before = spark.conf.get(_COPART, None)
+    first_in, second_in = threading.Event(), threading.Event()
+    first_done = threading.Event()
+    seen, errors = [], []
+    real = LakeTable.commit_rewrite
+
+    def spy(self, *a, **k):
+        if self.path == aps[0].table_path:
+            first_in.set()
+            second_in.wait(timeout=120)  # both merges inside their scope
+        else:
+            second_in.set()
+            first_done.wait(timeout=120)  # the first one's scope exited
+        seen.append(spark.conf.get(_COPART))
+        return real(self, *a, **k)
+
+    def run(ap, done):
+        try:
+            ap.apply_batch(_cdc_batch(spark, 1), batch_id=1)
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+        finally:
+            done.set()
+
+    monkeypatch.setattr(LakeTable, "commit_rewrite", spy)
+    first = threading.Thread(target=run, args=(aps[0], first_done))
+    second = threading.Thread(target=run,
+                              args=(aps[1], threading.Event()))
+    first.start()
+    assert first_in.wait(timeout=120)
+    second.start()
+    for t in (first, second):
+        t.join(timeout=300)
+    assert not errors, errors
+    assert seen == ["false", "false"]
+    assert spark.conf.get(_COPART, None) == before
+    for ap in aps:
+        assert ap.read_target().count() == 40
+
+
+def test_salted_collapse_keeps_phase1_combine(spark, tmp_path):
+    """dedup_salt: phase 1 still shuffles on (pk, salt) after a
+    map-side partial aggregate, and only phase 2 lands on the bucket
+    partitioning; apply results equal the unsalted ones."""
+    import re
+
+    events = generate_cdc_events(spark, GenSpec(n_events=2000))
+    cfg = SinkConfig(n_buckets=4, dedup_salt=4)
+    plan = plan_of(collapse_last_writer(
+        events, cfg, ["conv_id", "turn_idx", "text", "ts"],
+        bucket_by=("conv_id", 4),
+    ))
+    lines = plan.splitlines()
+    phase1 = [i for i, l in enumerate(lines)
+              if "ENSURE_REQUIREMENTS" in l and "Exchange" in l]
+    assert len(phase1) == 1, plan
+    keys = re.search(r"hashpartitioning\((.*), \d+\), ENSURE",
+                     lines[phase1[0]]).group(1).split(", ")
+    assert {"conv_id", "turn_idx"} <= {k.split("#")[0] for k in keys}
+    # one key is the salt, pmod(offset, salt)
+    assert any(re.search(rf"pmod\(kafka_offset#\d+L, 4\) AS {re.escape(k)}\b",
+                         plan) for k in keys), plan
+    assert "partial_max_by" in lines[phase1[0] + 1], plan
+    assert len(re.findall(
+        r"Exchange hashpartitioning\(__bucket#\d+, 4\), REPARTITION_BY_NUM",
+        plan,
+    )) == 1, plan
+
+    batches = [events.filter(F.col("kafka_offset") < 1000),
+               events.filter(F.col("kafka_offset") >= 1000)]
+    out = []
+    for salt in (1, 4):
+        ap = _bucket_applier(spark, tmp_path / f"s{salt}", dedup_salt=salt)
+        for i, b in enumerate(batches):
+            ap.apply_batch(b, batch_id=i)
+        out.append(sorted(tuple(r) for r in ap.read_target().collect()))
+    assert out[0] == out[1] and out[0]
